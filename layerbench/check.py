@@ -62,15 +62,27 @@ def _run_oracles(data_dir: str, jobs: list[tuple[str, str]]) -> None:
         os.replace(out + ".part", out)
 
 
-def oracle_frames(data_dir: str, sqls: dict[str, str], cache_dir: str, tag: str) -> dict[str, pd.DataFrame]:
+def tables_digest(data_dir: str) -> str:
+    """Digest of the bytes of every table in ``data_dir``."""
+    h = hashlib.sha256()
+    for name in sorted(os.listdir(data_dir)):
+        if name.endswith(".parquet"):
+            h.update(name.encode() + b"\0")
+            with open(os.path.join(data_dir, name), "rb") as f:
+                h.update(f.read())
+    return h.hexdigest()
+
+
+def oracle_frames(data_dir: str, sqls: dict[str, str], cache_dir: str) -> dict[str, pd.DataFrame]:
     """Run each oracle SQL once over the tables in ``data_dir`` (in a
     child process, so DuckDB's memory never counts against the run) and
     cache the result under ``cache_dir``, keyed by the SQL text and the
-    input ``tag``."""
+    tables' bytes."""
     os.makedirs(cache_dir, exist_ok=True)
+    tables = tables_digest(data_dir)
     paths, todo = {}, []
     for name, sql in sqls.items():
-        key = hashlib.sha256((tag + "\n" + sql).encode()).hexdigest()[:16]
+        key = hashlib.sha256((tables + "\n" + sql).encode()).hexdigest()[:16]
         paths[name] = os.path.join(cache_dir, f"{name}-{key}.parquet")
         if not os.path.exists(paths[name]):
             todo.append((sql, paths[name]))

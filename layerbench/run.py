@@ -9,7 +9,8 @@ timed passes until ``--seconds`` have passed and the workload's
 minimum pass count is reached, then teardown. The last line of stdout
 is one JSON object ``{"correct", "attempted", "failed", "metrics"}``;
 with ``--trace 0`` it carries the end-to-end metrics, with ``--trace
-1`` the per-layer ones (and the spans are written to ``--trace-out``).
+1`` the per-layer ones (and the spans are written to
+``.work/trace-<workload>-<seed>.json``).
 """
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(HERE, ".work")
+#: The input tables, copies of the harness tables: ``<scale>/<table>.parquet``.
+DATA = os.path.join(HERE, "data")
 
 #: A run that has not finished by then is killed, so it never exceeds 180 s.
 DEADLINE_S = 170.0
@@ -35,6 +38,11 @@ def declared_units(kind: str) -> dict[str, str]:
         return {m["name"]: m["unit"] for m in json.load(f)[kind]}
 
 
+def trace_path(workload: str, seed: int) -> str:
+    """Where a traced run writes its spans and per-op records."""
+    return os.path.join(WORK, f"trace-{workload}-{seed}.json")
+
+
 def parse_args(argv):
     import argparse
 
@@ -43,8 +51,6 @@ def parse_args(argv):
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    p.add_argument("--trace-out", help="where a traced run writes its spans "
-                   "(default: .work/trace-<workload>-<seed>.json)")
     return p.parse_args(argv)
 
 
@@ -92,7 +98,6 @@ def main(argv=None) -> int:
     import threading
 
     import check
-    import datagen
     import stats
     from workloads import WORKLOADS
 
@@ -115,17 +120,12 @@ def main(argv=None) -> int:
     watchdog.daemon = True
     watchdog.start()
 
-    # Benchmark-only work (inputs, oracle answers, output comparison) is
-    # timed so it can be left out of setup_s.
+    # Benchmark-only work (oracle answers, output comparison) is timed
+    # so it can be left out of setup_s.
     t0 = time.time()
-    data_dir = os.path.join(WORK, "data")
-    datagen.ensure(data_dir, Workload.tables)
     sqls = {name: entry.oracle_sql()[name] for name in Workload.oracles}
-    sf = Workload.tables[0][0]
     expected = check.oracle_frames(
-        os.path.join(data_dir, sf), sqls, os.path.join(WORK, "oracle"),
-        tag=f"{sf} datagen v{datagen.VERSION} seed {datagen.TABLE_SEED}",
-    )
+        os.path.join(DATA, Workload.scale), sqls, os.path.join(WORK, "oracle"))
     bench_only = time.time() - t0
 
     from myodish_peak_analysis_spark.session import get_spark
@@ -139,7 +139,7 @@ def main(argv=None) -> int:
         session_start_s = time.time() - t
         tracer = Tracer(spark, bool(args.trace))
         try:
-            workload.setup(spark, tracer, {s: os.path.join(data_dir, s) for s, _ in Workload.tables})
+            workload.setup(spark, tracer, os.path.join(DATA, Workload.scale))
             tracer.phase = "check"
             checked = workload.run_pass(tracer, check=True)
             # the comparison is the part of the checked pass no user pays
@@ -192,8 +192,7 @@ def main(argv=None) -> int:
         import layers
 
         metrics = layers.per_layer(tracer, session_start_s, pass_walls, cache_bytes)
-        out = args.trace_out or os.path.join(WORK, f"trace-{args.workload}-{args.seed}.json")
-        layers.write_trace(out, tracer, args, metrics)
+        layers.write_trace(trace_path(args.workload, args.seed), tracer, args, metrics)
     else:
         metrics = {
             "setup_s": setup_s,

@@ -23,13 +23,13 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 import stats  # noqa: E402
+from run import WORK, trace_path  # noqa: E402
 from spans import COUNTERS  # noqa: E402
 
 
-def run(workload: str, seed: int, seconds: float, trace: int, trace_out: str) -> dict:
+def run(workload: str, seed: int, seconds: float, trace: int) -> dict:
     cmd = [sys.executable, os.path.join(HERE, "run.py"), "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace),
-           "--trace-out", trace_out]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=os.path.dirname(HERE), capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
     if proc.returncode != 0 or not lines:
@@ -64,15 +64,12 @@ def main() -> None:
     p.add_argument("--seconds", type=float, default=10)
     args = p.parse_args()
 
-    work = os.path.join(HERE, ".work")
-    os.makedirs(work, exist_ok=True)
     traces, traced, plain = [], [], []
     for seed in args.seeds:
-        out = os.path.join(work, f"steady-{args.workload}-{seed}.json")
-        traced.append(run(args.workload, seed, args.seconds, 1, out))
-        with open(out) as f:
+        traced.append(run(args.workload, seed, args.seconds, 1))
+        with open(trace_path(args.workload, seed)) as f:
             traces.append(json.load(f))
-        plain.append(run(args.workload, seed, args.seconds, 0, out + ".untraced"))
+        plain.append(run(args.workload, seed, args.seconds, 0))
 
     print(f"# {args.workload}: {len(args.seeds)} traced + {len(args.seeds)} untraced runs, "
           f"seeds {args.seeds}\n")
@@ -96,7 +93,7 @@ def main() -> None:
         xs = [r["metrics"][name]["value"] for r in plain]
         spread = stats.iqr_share(xs) if len(xs) >= 2 else float("nan")
         print(f"| {name} | {stats.median(xs):.4g} | {spread:.3f} |")
-    with open(os.path.join(work, f"steadiness-{args.workload}.json"), "w") as f:
+    with open(os.path.join(WORK, f"steadiness-{args.workload}.json"), "w") as f:
         json.dump({"counters": table, "traced": traced, "untraced": plain}, f, indent=1)
 
 

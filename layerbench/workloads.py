@@ -61,20 +61,22 @@ class Peaks:
     caches the builders leave behind, so every pass scans afresh."""
 
     name = "peaks"
-    tables = [("sf0.01", "events")]
+    scale = "sf0.01"
     oracles = list(PEAK_QUERIES)
-    min_passes = 2
+    #: A pass takes about 10 s, longer than a run's --seconds; four give
+    #: pass_s a median of four samples and op_s.p50 one of eight.
+    min_passes = 4
 
     def __init__(self, seed: int, expected: dict):
         self.rng = random.Random(seed)
         self.expected = expected
 
-    def setup(self, spark, tracer, data_dirs: dict) -> None:
+    def setup(self, spark, tracer, sf_dir: str) -> None:
         import __spark_entry__ as entry
         from myodish_peak_analysis_spark.schema import read_table
 
         self.spark = spark
-        self.sf = data_dirs["sf0.01"]
+        self.sf = sf_dir
         registry = entry.queries()
         self.builders = {q: registry[q] for q in PEAK_QUERIES}
         with tracer.span("schema.load"):
@@ -102,11 +104,13 @@ class AnnServe:
     ``ann_serve_appended`` oracle restricted to the batch's queries."""
 
     name = "ann_serve"
-    tables = [("sf0.1", "embeddings")]
+    scale = "sf0.1"
     oracles = ["ann_serve_appended"]
-    #: 3 passes of 4 batches give the 11+ searches a tail needs
+    #: Passes are few and short because set-up (session, load, fit and
+    #: the checked pass) already takes about half of a run, and a full
+    #: check of the benchmark must fit its time limit.
     min_passes = 3
-    n_batches = 4
+    n_batches = 3
     batch_size = 20
 
     def __init__(self, seed: int, expected: dict):
@@ -121,7 +125,7 @@ class AnnServe:
                         for _ in range(self.n_batches)]
         self.expected = [want[want["query_id"].isin(b)] for b in self.batches]
 
-    def setup(self, spark, tracer, data_dirs: dict) -> None:
+    def setup(self, spark, tracer, sf_dir: str) -> None:
         from pyspark.sql import functions as F
 
         from myodish_peak_analysis_spark.llm import similarity
@@ -129,7 +133,7 @@ class AnnServe:
 
         self.similarity = similarity
         with tracer.span("schema.load"):
-            emb = read_table(spark, data_dirs["sf0.1"], "embeddings").cache()
+            emb = read_table(spark, sf_dir, "embeddings").cache()
             emb.count()
         self.held_out = emb.filter(F.col("vec_id") % 10 == 3)
         self.queries = emb.filter(
